@@ -1,10 +1,14 @@
 package graft.meta
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import java.time.Instant
+import java.time.temporal.ChronoUnit
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.Schemas
+import graft.pipeline.{PartitionKey, Schemas}
 import graft.sources.ParquetLake
 
 /** Processed-partition ledger: a tiny Parquet-backed table with logical
@@ -12,11 +16,12 @@ import graft.sources.ParquetLake
   *
   * The reference gets PK semantics for free from DuckDB
   * (`INSERT OR REPLACE`, reference metadata.py:3-9, silver.py:57-60); on
-  * plain Parquet we compose it from built-ins: union → row_number window
-  * keeping the newest `processed_at` per key → atomic swap of the table
-  * directory. The ledger is partition-granularity metadata, so it stays
-  * small (one row per (layer,city,date)) no matter how large the data lake
-  * grows — driver-side collection of it is safe even at 100 TB data scale.
+  * plain Parquet we compose it on the driver: collect the ledger, merge the
+  * incoming keys keeping the newest `processed_at` per key, and atomically
+  * swap in the table directory as one file. The ledger is
+  * partition-granularity metadata, so it stays small (one row per
+  * (layer,city,date)) no matter how large the data lake grows —
+  * driver-side collection of it is safe even at 100 TB data scale.
   */
 object MetadataLedger {
 
@@ -52,7 +57,7 @@ object MetadataLedger {
     * `processed_at` is stamped here (reference silver.py:59 CURRENT_TIMESTAMP).
     *
     * SINGLE-WRITER BY CONTRACT, and loud about it: the upsert is
-    * read-snapshot → union → atomic swap, so two writers racing would
+    * read-snapshot → merge → atomic swap, so two writers racing would
     * both read the old snapshot and the last swap would silently drop
     * the first writer's rows — the lost-update anomaly a plain-Parquet
     * ledger invites. A `<path>._lock` lease (atomic create-exclusive,
@@ -151,26 +156,28 @@ object MetadataLedger {
             " it now holds a fresh lease; retry after it finishes")
       } else throw new IllegalStateException(
         s"ledger $path is locked by a concurrent upsert (lease age ${age}ms" +
-          s" <= ${staleLockMs}ms): the read-union-swap upsert is" +
+          s" <= ${staleLockMs}ms): the read-merge-swap upsert is" +
           " single-writer — a second writer would silently drop this one's" +
           " rows. Retry after the holder finishes, or raise staleLockMs" +
           " breakage only for crashed holders.")
     }
     try {
-      val stamped = entries
-        .select(col("layer"), col("city"), col("date"))
-        .withColumn("processed_at", current_timestamp())
-      // tiebreak on a marker so the incoming row wins an equal-timestamp race
-      val w = Window.partitionBy("layer", "city", "date")
-        .orderBy(col("processed_at").desc, col("_incoming").desc)
-      val merged = read(spark, path).withColumn("_incoming", lit(0))
-        .unionByName(stamped.withColumn("_incoming", lit(1)))
-        .withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1)
-        .drop("_rn", "_incoming")
-      // the union reads the current ledger, so materialize before the swap
-      val snapshot = merged.localCheckpoint(true)
-      ParquetLake.atomicReplace(spark, snapshot, path)
+      val now = Instant.now().truncatedTo(ChronoUnit.MICROS) // Parquet keeps micros
+      val merged = scala.collection.mutable.LinkedHashMap.empty[(String, PartitionKey), Instant]
+      read(spark, path).collect().foreach { r =>
+        merged((r.getString(0), PartitionKey.of(r.get(1), r.get(2)))) = r.get(3) match {
+          case t: java.sql.Timestamp => t.toInstant
+          case at => at.asInstanceOf[Instant] // the java8 API type, or null
+        }
+      }
+      // the newest processed_at wins; an equal stamp goes to the incoming row
+      entries.select(col("layer"), col("city"), col("date")).collect().foreach { r =>
+        val k = (r.getString(0), PartitionKey.of(r.get(1), r.get(2)))
+        if (merged.get(k).forall(at => at == null || !at.isAfter(now))) merged(k) = now
+      }
+      val rows = merged.map { case ((layer, p), at) => Row(layer, p.city, p.date, at) }
+      ParquetLake.atomicReplace(spark,
+        spark.createDataFrame(rows.toSeq.asJava, Schemas.metadata).coalesce(1), path)
     } finally {
       // Release ONLY our own lease: if this upsert outlived staleLockMs a
       // breaker may have replaced the lock with its fresh lease — deleting
@@ -179,14 +186,16 @@ object MetadataLedger {
     }
   }
 
-  /** Partitions already processed for a layer, as a (city, date) DataFrame
-    * (reference silver.py:15-20). */
-  def processed(spark: SparkSession, path: String, layer: String): DataFrame =
-    read(spark, path).filter(col("layer") === layer).select("city", "date")
+  /** Partitions already processed for a layer (reference silver.py:15-20):
+    * one job over the tiny ledger table. */
+  def processed(spark: SparkSession, path: String, layer: String): Set[PartitionKey] =
+    read(spark, path).filter(col("layer") === layer).select("city", "date").collect()
+      .map(r => PartitionKey.of(r.get(0), r.get(1))).toSet
 
   /** The incremental core: partitions present in the source layer but not
-    * yet in the ledger — a true distributed anti-join standing in for the
-    * reference's driver-side set difference (silver.py:69, gold.py:118). */
-  def pendingPartitions(available: DataFrame, processed: DataFrame): DataFrame =
-    available.join(broadcast(processed), Seq("city", "date"), "left_anti")
+    * yet in the ledger — the reference's driver-side set difference
+    * (silver.py:69, gold.py:118), in listing order. */
+  def pendingPartitions(available: Seq[PartitionKey],
+                        processed: Set[PartitionKey]): Seq[PartitionKey] =
+    available.filterNot(processed)
 }

@@ -2,7 +2,6 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.meta.MetadataLedger
 import graft.sources.ParquetLake
@@ -64,31 +63,25 @@ object Gold {
           observedValidation: Boolean = true): Long = {
     val silver = ParquetLake.readOrEmpty(spark, silverRoot, Schemas.silver)
     val available = Layers.availablePartitions(silver)
-    val pending0 =
+    val pending =
       if (fullRefresh) available
       else MetadataLedger.pendingPartitions(
         available, MetadataLedger.processed(spark, metadataPath, layerName))
-    val pending = pending0.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nPending = pending.count()
-      if (nPending == 0) return 0L
-      val batch = transform(Layers.scopeToPending(silver, pending))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        if (observedValidation) {
-          // Both guards ride the write itself — zero validation re-scans.
-          val (inst1, validateParts) = Layers.requireAllNonEmptyObserved(batch, pending)
-          val (inst2, validateNulls) = requireNoNullAggregatesObserved(inst1)
-          ParquetLake.overwritePartitions(inst2, goldRoot, Seq("city", "date"))
-          validateParts(); validateNulls() // throw before the ledger is stamped
-        } else {
-          Layers.requireAllNonEmpty(batch, pending)
-          requireNoNullAggregates(batch)
-          ParquetLake.overwritePartitions(batch, goldRoot, Seq("city", "date"))
-        }
-        MetadataLedger.upsert(spark, metadataPath, pending.withColumn("layer", lit(layerName)))
-        nPending
-      } finally batch.unpersist()
-    } finally pending.unpersist()
+    if (pending.isEmpty) return 0L
+    val pendingDf = Layers.frame(spark, pending)
+    val batch = transform(Layers.scopeToPending(silver, pendingDf))
+    if (observedValidation) {
+      // Both guards ride the write itself — zero validation re-scans.
+      val (inst1, validateParts) = Layers.requireAllNonEmptyObserved(batch, pendingDf)
+      val (inst2, validateNulls) = requireNoNullAggregatesObserved(inst1)
+      ParquetLake.overwritePartitions(inst2, goldRoot, Seq("city", "date"))
+      validateParts(); validateNulls() // throw before the ledger is stamped
+    } else {
+      Layers.requireAllNonEmpty(batch, pendingDf)
+      requireNoNullAggregates(batch)
+      ParquetLake.overwritePartitions(batch, goldRoot, Seq("city", "date"))
+    }
+    MetadataLedger.upsert(spark, metadataPath, pendingDf.withColumn("layer", lit(layerName)))
+    pending.size.toLong
   }
 }

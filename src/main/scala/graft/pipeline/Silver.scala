@@ -3,7 +3,6 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType}
-import org.apache.spark.storage.StorageLevel
 
 import graft.meta.MetadataLedger
 import graft.sources.ParquetLake
@@ -48,28 +47,22 @@ object Silver {
     * reference's validate-before-write order at the price of a re-scan. */
   def run(spark: SparkSession, bronzeRoot: String, silverRoot: String,
           metadataPath: String, observedValidation: Boolean = true): Long = {
-    val bronze = ParquetLake.read(spark, bronzeRoot) // missing bronze → fatal, like the reference
+    val bronze = ParquetLake.read(spark, bronzeRoot, Schemas.bronze) // missing bronze → fatal, like the reference
     val pending = MetadataLedger.pendingPartitions(
       Layers.availablePartitions(bronze),
-      MetadataLedger.processed(spark, metadataPath, layerName)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nPending = pending.count()
-      if (nPending == 0) return 0L
-      val batch = transform(Layers.scopeToPending(bronze, pending))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        if (observedValidation) {
-          val (instrumented, validate) = Layers.requireAllNonEmptyObserved(batch, pending)
-          ParquetLake.overwritePartitions(instrumented, silverRoot, Seq("city", "date"))
-          validate() // throws before the ledger is stamped
-        } else {
-          Layers.requireAllNonEmpty(batch, pending)
-          ParquetLake.overwritePartitions(batch, silverRoot, Seq("city", "date"))
-        }
-        MetadataLedger.upsert(spark, metadataPath, pending.withColumn("layer", lit(layerName)))
-        nPending
-      } finally batch.unpersist()
-    } finally pending.unpersist()
+      MetadataLedger.processed(spark, metadataPath, layerName))
+    if (pending.isEmpty) return 0L
+    val pendingDf = Layers.frame(spark, pending)
+    val batch = transform(Layers.scopeToPending(bronze, pendingDf))
+    if (observedValidation) {
+      val (instrumented, validate) = Layers.requireAllNonEmptyObserved(batch, pendingDf)
+      ParquetLake.overwritePartitions(instrumented, silverRoot, Seq("city", "date"))
+      validate() // throws before the ledger is stamped
+    } else {
+      Layers.requireAllNonEmpty(batch, pendingDf)
+      ParquetLake.overwritePartitions(batch, silverRoot, Seq("city", "date"))
+    }
+    MetadataLedger.upsert(spark, metadataPath, pendingDf.withColumn("layer", lit(layerName)))
+    pending.size.toLong
   }
 }

@@ -22,10 +22,11 @@ object ParquetLake {
   def exists(spark: SparkSession, path: String): Boolean =
     fs(spark, path).exists(new Path(path))
 
-  /** Read a partitioned table root; partition columns (`city=`/`date=` dirs)
-    * are discovered and type-inferred by Spark. */
-  def read(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(root)
+  /** Read a partitioned table root with its declared schema: partition
+    * columns (`city=`/`date=` dirs) are discovered and typed by `schema`,
+    * and no footer-inference job runs. A missing root fails here. */
+  def read(spark: SparkSession, root: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(root)
 
   /** Missing-input-tolerant read: absent path → empty DataFrame with the
     * given schema (the reference's gold layer catches IOException and

@@ -1,9 +1,11 @@
 package graft.meta
 
 import java.sql.Date
+import java.time.LocalDate
 import org.apache.spark.sql.functions._
 
 import graft.SparkFunSuite
+import graft.pipeline.PartitionKey
 
 class MetadataLedgerSpec extends SparkFunSuite {
   import spark.implicits._
@@ -37,14 +39,18 @@ class MetadataLedgerSpec extends SparkFunSuite {
     assert(!t2.before(t1), "replacement must carry the newer processed_at")
   }
 
-  test("pendingPartitions = available minus processed (anti-join)") {
-    val avail = Seq(("Delhi", Date.valueOf("2026-02-13")), ("London", Date.valueOf("2026-02-13")),
-      ("Delhi", Date.valueOf("2026-02-14"))).toDF("city", "date")
-    val done = Seq(("Delhi", Date.valueOf("2026-02-13"))).toDF("city", "date")
-    val pending = MetadataLedger.pendingPartitions(avail, done)
-      .orderBy("city", "date").collect()
-    assert(pending.map(r => (r.getString(0), r.getDate(1).toString)).toSeq ==
-      Seq(("Delhi", "2026-02-14"), ("London", "2026-02-13")))
+  test("pendingPartitions = available minus processed (set difference)") {
+    def key(c: String, d: String) = PartitionKey(c, LocalDate.parse(d))
+    val avail = Seq(key("Delhi", "2026-02-13"), key("London", "2026-02-13"),
+      key("Delhi", "2026-02-14"))
+    val p = tmpDir("ml") + "/meta"
+    MetadataLedger.ensure(spark, p)
+    MetadataLedger.upsert(spark, p, entries(
+      ("silver", "Delhi", "2026-02-13"), ("gold", "London", "2026-02-13")))
+    val done = MetadataLedger.processed(spark, p, "silver")
+    assert(done == Set(key("Delhi", "2026-02-13")), "processed is scoped to its layer")
+    assert(MetadataLedger.pendingPartitions(avail, done) ==
+      Seq(key("London", "2026-02-13"), key("Delhi", "2026-02-14")))
   }
 
   test("concurrent upsert fails loudly while the lease is held; stale lease breaks") {

@@ -1,10 +1,12 @@
 package graft.pipeline
 
 import java.sql.Date
+import java.time.LocalDate
 import org.apache.spark.sql.functions._
 
 import graft.SparkFunSuite
 import graft.pipeline.WeatherFixtures._
+import graft.sources.ParquetLake
 
 class LayersSpec extends SparkFunSuite {
   import spark.implicits._
@@ -14,7 +16,7 @@ class LayersSpec extends SparkFunSuite {
       bronzeRow("Delhi", "2026-02-13"), bronzeRow("London", "2026-02-13"),
       bronzeRow("Delhi", "2026-02-14"))
     val df = bronzeDf(spark, rows)
-    val pending = Seq(("Delhi", Date.valueOf("2026-02-14"))).toDF("city", "date")
+    val pending = Layers.frame(spark, Seq(PartitionKey("Delhi", LocalDate.parse("2026-02-14"))))
     val out = Layers.scopeToPending(df, pending, literalThreshold = 256)
     assert(out.select("city", "date").distinct().collect().map(r =>
       (r.getString(0), r.getDate(1).toString)).toSeq == Seq(("Delhi", "2026-02-14")))
@@ -23,8 +25,7 @@ class LayersSpec extends SparkFunSuite {
   test("scopeToPending semi-join regime (pending set above threshold) gives identical results") {
     val rows = (1 to 30).map(i => bronzeRow(s"City$i", f"2026-02-${i % 28 + 1}%02d"))
     val df = bronzeDf(spark, rows)
-    val pendingPairs = rows.take(20).map(r => (r.city, r.date))
-    val pending = pendingPairs.toDF("city", "date")
+    val pending = Layers.frame(spark, rows.take(20).map(r => PartitionKey.of(r.city, r.date)))
     val literal = Layers.scopeToPending(df, pending, literalThreshold = 256)
       .select("city", "date").collect().map(r => (r.getString(0), r.getDate(1).toString)).toSet
     val semi = Layers.scopeToPending(df, pending, literalThreshold = 2)
@@ -39,10 +40,33 @@ class LayersSpec extends SparkFunSuite {
     assert(Layers.scopeToPending(df, pending).count() == 0)
   }
 
+  test("availablePartitions lists the partition directories that hold files") {
+    val root = tmpDir("avail") + "/data"
+    writeBronze(spark, Seq(bronzeRow("Delhi", "2026-02-13"), bronzeRow("Delhi", "2026-02-13"),
+      bronzeRow("London", "2026-02-13"), bronzeRow("Delhi", "2026-02-14")), root)
+    new java.io.File(root, "city=Paris/date=2026-02-13").mkdirs() // no files: not a partition
+    val listed = Layers.availablePartitions(ParquetLake.read(spark, root, Schemas.bronze))
+    assert(listed.toSet == Set(
+      PartitionKey("Delhi", LocalDate.parse("2026-02-13")),
+      PartitionKey("London", LocalDate.parse("2026-02-13")),
+      PartitionKey("Delhi", LocalDate.parse("2026-02-14"))))
+    assert(listed.size == 3)
+    // a frame not backed by files (a missing root read tolerantly) lists nothing
+    assert(Layers.availablePartitions(
+      ParquetLake.readOrEmpty(spark, root + "_missing", Schemas.bronze)).isEmpty)
+  }
+
+  test("PartitionKey compares equal whatever the date type") {
+    assert(PartitionKey.of("Delhi", Date.valueOf("2026-02-13")) ==
+      PartitionKey.of("Delhi", LocalDate.parse("2026-02-13")))
+    assert(PartitionKey.of(null, null) == PartitionKey(null, null))
+  }
+
   test("requireAllNonEmpty passes when every pending partition produced rows") {
-    val df = bronzeDf(spark, Seq(bronzeRow("Delhi", "2026-02-13")))
-    val pending = Seq(("Delhi", Date.valueOf("2026-02-13"))).toDF("city", "date")
-    Layers.requireAllNonEmpty(df, pending) // must not throw
+    val df = bronzeDf(spark, Seq(bronzeRow("Delhi", "2026-02-13"), bronzeRow(null, "2026-02-13")))
+    val pending = Seq(("Delhi", Date.valueOf("2026-02-13")), (null, Date.valueOf("2026-02-13")))
+      .toDF("city", "date")
+    Layers.requireAllNonEmpty(df, pending) // must not throw: a null city matches itself
   }
 
   test("requireAllNonEmptyObserved: the WRITE job collects the counts; no re-scan") {

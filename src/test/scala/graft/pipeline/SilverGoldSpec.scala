@@ -1,10 +1,12 @@
 package graft.pipeline
 
 import java.sql.Date
+import java.time.LocalDate
 import org.apache.spark.sql.functions._
 
 import graft.SparkFunSuite
 import graft.meta.MetadataLedger
+import graft.sources.ParquetLake
 import graft.pipeline.WeatherFixtures._
 
 class SilverGoldSpec extends SparkFunSuite {
@@ -127,5 +129,47 @@ class SilverGoldSpec extends SparkFunSuite {
     assert(e2.getMessage.contains("empty partitions"))
     assert(MetadataLedger.read(spark, s"$root/meta").count() == 0,
       "a failed validation must not stamp the ledger in either mode")
+  }
+
+  test("null-city partition is processed once and keeps one ledger row per layer") {
+    val root = tmpDir("sgnull")
+    writeBronze(spark, Seq(bronzeRow(null, "2026-02-13"), bronzeRow("Delhi", "2026-02-13")),
+      s"$root/data")
+    MetadataLedger.ensure(spark, s"$root/meta")
+    def runBoth() = (Silver.run(spark, s"$root/data", s"$root/silver", s"$root/meta"),
+      Gold.run(spark, s"$root/silver", s"$root/gold", s"$root/meta"))
+    assert(runBoth() == ((2L, 2L)))
+    assert(runBoth() == ((0L, 0L)), "the null-city partition must not stay pending")
+    val ledger = MetadataLedger.read(spark, s"$root/meta")
+    assert(ledger.count() == 4)
+    assert(ledger.filter(col("city").isNull).count() == 2)
+    assert(spark.read.parquet(s"$root/gold").filter(col("city").isNull).count() == 1)
+  }
+
+  test("ledger and listed keys match under the java8 datetime API") {
+    val root = tmpDir("sgj8")
+    writeBronze(spark, Seq(bronzeRow("Delhi", "2026-02-13"), bronzeRow("London", "2026-02-14")),
+      s"$root/data")
+    MetadataLedger.ensure(spark, s"$root/meta")
+    val key = "spark.sql.datetime.java8API.enabled"
+    spark.conf.set(key, "true")
+    try {
+      assert(Silver.run(spark, s"$root/data", s"$root/silver", s"$root/meta") == 2)
+      assert(MetadataLedger.read(spark, s"$root/meta").head.get(2).isInstanceOf[LocalDate])
+      assert(MetadataLedger.processed(spark, s"$root/meta", Silver.layerName) ==
+        Layers.availablePartitions(ParquetLake.read(spark, s"$root/data", Schemas.bronze)).toSet)
+      assert(Silver.run(spark, s"$root/data", s"$root/silver", s"$root/meta") == 0)
+    } finally spark.conf.unset(key)
+    // the ledger written under one date type is read back under the other
+    assert(Silver.run(spark, s"$root/data", s"$root/silver", s"$root/meta") == 0)
+    assert(MetadataLedger.read(spark, s"$root/meta").count() == 2)
+  }
+
+  test("a bronze run with no raw rows leaves silver nothing to do") {
+    val root = tmpDir("sgempty")
+    MetadataLedger.ensure(spark, s"$root/meta")
+    Bronze.run(spark, Seq.empty, s"$root/data", Date.valueOf("2026-02-13"))
+    assert(Silver.run(spark, s"$root/data", s"$root/silver", s"$root/meta") == 0)
+    assert(MetadataLedger.read(spark, s"$root/meta").count() == 0)
   }
 }
